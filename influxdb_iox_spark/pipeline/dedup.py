@@ -487,7 +487,14 @@ def near_duplicate_pairs_minhash(
       (BENCH_NOTES r6), materially lower run-to-run variance than the
       checkpoint's block-manager writes.  Pass ``materialize_dir`` on a
       real cluster (shared FS / object store).
+
+    Any other ``materialize`` value raises ``ValueError`` before a job runs.
     """
+    if materialize not in ("local_checkpoint", "parquet"):
+        raise ValueError(
+            "materialize must be 'local_checkpoint' or 'parquet', "
+            f"got {materialize!r}"
+        )
     sigs = minhash_signatures(
         df, text_col, id_col, shingle_n, num_perm,
         # the per-shingle pre-frame keeps its executor-local checkpoint

@@ -31,10 +31,15 @@ def _reorg_pool(spark: SparkSession):
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
 from influxdb_iox_spark.database import Database
-from influxdb_iox_spark.operators.dedup import DEDUP_ORDER_COLUMN, deduplicate
 from influxdb_iox_spark.operators.overlap import group_potential_duplicates
-from influxdb_iox_spark.schema import IoxSchema, merge_chunk_frames
+from influxdb_iox_spark.schema import IoxSchema
 from influxdb_iox_spark.sources.store import ChunkMeta, TableStore
+
+#: How long a rewritten chunk's files outlive their manifest drop.  A
+#: query planned before a compaction or persist still lists the inputs'
+#: files; they are parked and reclaimed by ``TableStore.gc_retired`` only
+#: after this grace period, which is longer than any query runs.
+RETIRED_GRACE_SECONDS = 3600.0
 
 
 def compact_chunks(
@@ -76,20 +81,7 @@ def compact_chunks(
             # unrestricted GC would silently lose it (review finding).
             tomb = store._tombstones_for_chunks(table, chunks)
             applied = {tid for lst in tomb.values() for tid, _ in lst}
-
-            ordered = [
-                store.apply_tombstones(
-                    store.read_chunk(spark, m), m.chunk_id, tomb,
-                    schema.time_column,
-                ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
-                for m in sorted(chunks, key=lambda m: m.chunk_id)
-            ]
-            df = deduplicate(
-                merge_chunk_frames(ordered),
-                schema.tag_columns,
-                schema.field_columns,
-                schema.time_column,
-            )
+            df = store.read_overlap_group(spark, chunks, schema, tomb)
             meta = store.write_chunk(
                 df, table, schema, partition_key=partition_key, dedup_batch=False,
                 # the merge of fully-drained inputs is itself drained; losing
@@ -97,7 +89,9 @@ def compact_chunks(
                 # data every sweep
                 persisted=all(c.persisted for c in chunks),
             )
-            store.drop_chunks(table, ids)
+            store.drop_chunks(
+                table, ids, defer_delete_seconds=RETIRED_GRACE_SECONDS
+            )
             store.retarget_tombstones(table, ids, [meta.chunk_id], applied)
             store.gc_tombstones(table, only_ids=applied)
     except Exception:
@@ -200,20 +194,7 @@ def _persist_split_inner(
         # compact_chunks (shared helper, same mid-job retarget + scoped GC)
         tomb = store._tombstones_for_chunks(table, chunks)
         applied = {tid for lst in tomb.values() for tid, _ in lst}
-
-        ordered = [
-            store.apply_tombstones(
-                store.read_chunk(spark, m), m.chunk_id, tomb,
-                schema.time_column,
-            ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
-            for m in sorted(chunks, key=lambda m: m.chunk_id)
-        ]
-        df = deduplicate(
-            merge_chunk_frames(ordered),
-            schema.tag_columns,
-            schema.field_columns,
-            schema.time_column,
-        ).cache()
+        df = store.read_overlap_group(spark, chunks, schema, tomb).cache()
         try:
             cold, hot = split_frame(
                 df, F.col(schema.time_column) <= F.lit(split_time_ns)
@@ -233,7 +214,9 @@ def _persist_split_inner(
                 hot_meta = store.write_chunk(
                     hot, table, schema, partition_key=partition_key, dedup_batch=False
                 )
-            store.drop_chunks(table, [c.chunk_id for c in chunks])
+            store.drop_chunks(
+                table, _ids, defer_delete_seconds=RETIRED_GRACE_SECONDS
+            )
             successors = [
                 m.chunk_id for m in (cold_meta, hot_meta) if m is not None
             ]

@@ -142,6 +142,13 @@ class IoxSchema:
         """All tags + time (schema.rs primary-key definition)."""
         return [*self.tag_columns, self.time_column]
 
+    def project(self, columns: list[str]) -> StructType:
+        """The registered fields named in ``columns``, in schema order —
+        the read schema of a chunk that holds only those columns (names
+        outside the schema are dropped)."""
+        names = set(columns)
+        return StructType([f for f in self.struct.fields if f.name in names])
+
     def merge(self, other: "IoxSchema") -> "IoxSchema":
         """Union two chunk schemas (SchemaMerger, merge.rs:83).
 

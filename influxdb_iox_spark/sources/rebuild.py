@@ -22,9 +22,11 @@ plus one of our own:
   flag of the same name).
 - **No removals**: a chunk that was dropped from the manifest but whose
   directory still exists (``drop_chunks(delete_files=False)``, or a
-  parked retired dir whose ``_retired.json`` died with the manifest)
-  comes BACK.  Dedup-on-read masks duplicate rows, but logically
-  deleted data reappears — exactly the reference's caveat.  PREDICATE
+  crash between the drop and the file deletion) comes BACK.
+  Dedup-on-read masks duplicate rows, but logically deleted data
+  reappears — exactly the reference's caveat.  Chunk dirs parked for
+  deferred deletion (every compaction and persist parks its inputs)
+  carry a ``TableStore.RETIRED_MARKER`` file and are skipped.  PREDICATE
   deletes are the exception: live tombstones ride data-plane sidecars
   (``<table>/_deletes/*.json``) and are re-registered here, so rows an
   acknowledged ``delete_predicate`` removed stay removed through a
@@ -157,6 +159,10 @@ def rebuild_manifest(
             if not m:
                 continue  # _bulk-* staging and foreign files are not chunks
             rel = os.path.join(table, fname)
+            if os.path.exists(
+                os.path.join(store.base_dir, rel, store.RETIRED_MARKER)
+            ):
+                continue  # parked for deferred deletion: not a live chunk
             chunk_id = int(m.group(1))
             # rebuild.rs's ignore_metadata_read_failure must cover ANY
             # unreadable metadata: truncated sidecar JSON (JSONDecodeError

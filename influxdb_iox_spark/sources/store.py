@@ -771,7 +771,10 @@ class TableStore:
                 seq_column=seq_column,
             )
         out_cols = [f.name for f in schema.struct.fields if f.name in df.columns]
-        df = df.select(*out_cols).sortWithinPartitions(*pk)
+        # a compaction of chunks that all predate a tag holds no such column
+        df = df.select(*out_cols).sortWithinPartitions(
+            *[c for c in pk if c in out_cols]
+        )
 
         chunk_id = self._alloc_chunk_id(table)
         rel = os.path.join(table, f"chunk-{chunk_id:06d}-{uuid.uuid4().hex[:8]}")
@@ -787,7 +790,9 @@ class TableStore:
         # scan's field-stat chunk pruning (the pruning.rs behavior), and the
         # footers already carry them — no extra cost.
         row_count, stats, col_bytes = self._stats_from_footers(path, out_cols)
-        tag_catalog = self._collect_tag_catalog(df.sparkSession, path, schema)
+        tag_catalog = self._collect_tag_catalog(
+            df.sparkSession, path, schema, out_cols
+        )
         est_bytes = _dir_parquet_bytes(path)
         meta = ChunkMeta(
             chunk_id=chunk_id,
@@ -1169,20 +1174,22 @@ class TableStore:
     TAG_CATALOG_CAP = 1000
 
     def _collect_tag_catalog(
-        self, spark: SparkSession, path: str, schema: IoxSchema
+        self, spark: SparkSession, path: str, schema: IoxSchema, columns: list[str]
     ) -> dict[str, list | None]:
-        """Distinct tag values per tag for the just-written chunk.
+        """Distinct tag values per tag for the just-written chunk, whose
+        parquet columns are ``columns``.
 
         One column-pruned Spark job over the sorted chunk (tags are
-        dictionary-encoded in parquet, so this reads dictionaries, not data).
+        dictionary-encoded in parquet, so this reads dictionaries, not data),
+        read with the tags' registered types — no schema-inference job.
         High-cardinality tags overflow the cap and are recorded as None →
         metadata path falls back to a scan, exactly like the reference
         returning 'unknown' from metadata-only evaluation.
         """
-        chunk_df = spark.read.parquet(path)
-        tags = [t for t in schema.tag_columns if t in chunk_df.columns]
+        tags = [t for t in schema.tag_columns if t in columns]
         if not tags:
             return {}
+        chunk_df = spark.read.schema(schema.project(tags)).parquet(path)
         row = chunk_df.agg(*[F.collect_set(t).alias(t) for t in tags]).first()
         out: dict[str, list | None] = {}
         for t in tags:
@@ -1267,8 +1274,68 @@ class TableStore:
         return total, stats, col_bytes
 
     # -- read / scan ------------------------------------------------------
-    def read_chunk(self, spark: SparkSession, meta: ChunkMeta) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.base_dir, meta.path))
+    def chunk_columns(self, meta: ChunkMeta) -> list[str]:
+        """The chunk's parquet column names, without a Spark job: from the
+        manifest's footer-recorded ``column_bytes``, or — for chunks
+        registered before that field existed, or holding no row group —
+        from one parquet footer read on the driver."""
+        if meta.column_bytes:
+            return list(meta.column_bytes)
+        import pyarrow.parquet as pq
+
+        d = os.path.join(self.base_dir, meta.path)
+        for fname in sorted(os.listdir(d)):
+            if fname.endswith(".parquet"):
+                return pq.read_schema(os.path.join(d, fname)).names
+        return []
+
+    def read_chunk(
+        self, spark: SparkSession, meta: ChunkMeta, schema: IoxSchema
+    ) -> DataFrame:
+        """One chunk as a DataFrame, read with the registered ``schema``
+        projected onto the chunk's own columns (``chunk_columns``).
+
+        Building it starts no Spark job: ``spark.read.parquet`` without a
+        schema would run a one-task schema-inference job per chunk.  The
+        projection keeps the chunk's column set — a chunk written before a
+        field was added to the table does not gain a null-filled column,
+        so a compaction's output holds exactly the union of its inputs'
+        columns."""
+        return spark.read.schema(
+            schema.project(self.chunk_columns(meta))
+        ).parquet(os.path.join(self.base_dir, meta.path))
+
+    def read_overlap_group(
+        self,
+        spark: SparkSession,
+        chunks: "list[ChunkMeta]",
+        schema: IoxSchema,
+        tomb: dict[int, list],
+    ) -> DataFrame:
+        """Last-non-null merge of PK-overlapping chunks — the one definition
+        shared by the scan's overlap groups and both reorg rewrites.
+
+        Each chunk is read by ``read_chunk``, filtered by its delete
+        tombstones (``tomb`` from _tombstones_for_chunks) BEFORE dedup — a
+        deleted row must not contribute fields to the merge — and ordered by
+        chunk id, so the newest non-null value wins.  The output holds the
+        union of the inputs' columns: a tag or field that no input holds
+        stays absent instead of failing the merge."""
+        ordered = [
+            self.apply_tombstones(
+                self.read_chunk(spark, m, schema), m.chunk_id, tomb,
+                schema.time_column,
+            ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
+            for m in sorted(chunks, key=lambda m: m.chunk_id)
+        ]
+        merged = merge_chunk_frames(ordered)
+        present = set(merged.columns)
+        return deduplicate(
+            merged,
+            [c for c in schema.tag_columns if c in present],
+            [c for c in schema.field_columns if c in present],
+            schema.time_column,
+        )
 
     def prune_chunks(
         self, table: str, predicate: Predicate | None, time_column: str = "time"
@@ -1314,7 +1381,14 @@ class TableStore:
         schema: IoxSchema,
         predicate: Predicate | None = None,
     ) -> DataFrame:
-        """Dedup-correct scan of one table (the ChunkTableProvider equivalent)."""
+        """Dedup-correct scan of one table (the ChunkTableProvider equivalent).
+
+        Building the plan is driver work only and starts no Spark job: like
+        the reference taking each table's schema from the catalog
+        (query/src/lib.rs ``table_schema``), every relation is read with
+        the registered ``schema`` — the whole schema for the batched clean
+        chunks, each chunk's projection of it (``read_chunk``) inside an
+        overlap group — never with parquet schema inference."""
         chunks = self.prune_chunks(table, predicate, schema.time_column)
         if not chunks:
             return spark.createDataFrame([], schema.struct)
@@ -1356,20 +1430,7 @@ class TableStore:
                     os.path.join(self.base_dir, members[0].path)
                 )
             else:
-                ordered = [
-                    self.apply_tombstones(
-                        self.read_chunk(spark, m), m.chunk_id, tomb,
-                        schema.time_column,
-                    ).withColumn(DEDUP_ORDER_COLUMN, F.lit(m.chunk_id))
-                    for m in sorted(members, key=lambda m: m.chunk_id)
-                ]
-                df = deduplicate(
-                    merge_chunk_frames(ordered),
-                    schema.tag_columns,
-                    schema.field_columns,
-                    schema.time_column,
-                )
-                parts.append(df)
+                parts.append(self.read_overlap_group(spark, members, schema, tomb))
 
         stone_by_id = {
             tid: dp for lst in tomb.values() for tid, dp in lst
@@ -1390,6 +1451,12 @@ class TableStore:
             return spark.createDataFrame([], schema.struct)
 
         out = merge_chunk_frames(parts)
+        # only overlap groups whose chunks all predate a column lack it
+        missing = [f for f in schema.struct.fields if f.name not in out.columns]
+        if missing:
+            out = out.select(
+                "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
+            )
         if predicate is not None:
             out = predicate.apply(out, schema.time_column)
         cols = [f.name for f in schema.struct.fields if f.name in out.columns]
@@ -1414,12 +1481,16 @@ class TableStore:
         concurrent appenders (no rewrite can lose their records); the log
         chain is shrunk later by ``compact_manifest``.
 
-        Concurrency note on FILES: immediate deletion assumes the
-        no-concurrent-reader deployment (a lazy DataFrame still referencing
-        a retired chunk path fails at action time).  When queries run
-        alongside compaction, pass ``defer_delete_seconds > 0``: retired
-        paths are parked in ``_retired.json`` and reclaimed by
-        ``gc_retired`` once the grace period (longer than any query) passes.
+        Concurrency note on FILES: with immediate deletion (the default),
+        a lazy DataFrame still referencing a deleted chunk path fails at
+        action time with FILE_NOT_EXIST.  With ``defer_delete_seconds > 0``
+        retired paths are parked (listed in ``_retired.json``, marked with
+        ``RETIRED_MARKER``) and reclaimed by ``gc_retired`` once the grace
+        period (longer than any query) passes.  The lifecycle rewrites
+        (``plans.reorg.compact_chunks`` / ``persist_split``) always defer,
+        by ``plans.reorg.RETIRED_GRACE_SECONDS``, because queries run
+        alongside them: a frame built before a sweep still reads the
+        pre-sweep chunks after it.
         """
         ids = set(chunk_ids)
         dropped: list[ChunkMeta] = []
@@ -1501,7 +1572,17 @@ class TableStore:
     def operations(self) -> list[dict]:
         return self.backend.get_json("_operations.json") or []
 
+    #: marker file in a parked chunk directory: the data-plane record
+    #: that the chunk left the manifest, which ``rebuild_manifest`` honours
+    #: after a manifest loss took ``_retired.json`` with it
+    RETIRED_MARKER = "_iox_retired"
+
     def _park_retired(self, table: str, paths: list[str]) -> None:
+        for rel in paths:
+            try:
+                open(os.path.join(self.base_dir, rel, self.RETIRED_MARKER), "w").close()
+            except FileNotFoundError:
+                pass  # directory already gone: nothing to rebuild from
         key = f"{table}/_retired.json"
         entries = self.backend.get_json(key) or []
         now = _time.time()

@@ -121,5 +121,5 @@ def test_backfill_many_keys_is_one_write_job(spark, tmp_path):
     assert total == 30
     one = [m for m in metas if m.partition_key == "1970-01-05"]
     assert len(one) == 1
-    rows = store.read_chunk(spark, one[0]).collect()
+    rows = store.read_chunk(spark, one[0], CPU).collect()
     assert len(rows) == 1 and rows[0].user == 4.0

@@ -283,3 +283,20 @@ def test_minhash_signatures_materialize_modes_identical(spark):
     assert norm(minhash_signatures(df, materialize=None)) == base
     with pytest.raises(ValueError, match="materialize"):
         minhash_signatures(df, materialize="bogus")
+
+
+def test_minhash_near_dup_rejects_unknown_materialize(spark, docs):
+    """A typo in the signature frame's ``materialize`` strategy fails
+    loudly, naming the accepted values, before any Spark job runs —
+    instead of silently taking the local-checkpoint branch."""
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash-bad-materialize", "argument check", False)
+    try:
+        for bad in ("parqet", "checkpoint", None):
+            with pytest.raises(
+                ValueError, match="'local_checkpoint' or 'parquet'"
+            ):
+                near_duplicate_pairs_minhash(docs, materialize=bad)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert sc.statusTracker().getJobIdsForGroup("minhash-bad-materialize") == []

@@ -275,3 +275,22 @@ def test_retargeted_tombstone_sidecar_follows_replacement(spark, tmp_path):
     side = {r["chunk_id"] for r in store.tombstone_sidecars("cpu")}
     assert side == {live[0]["chunk_id"]}
     assert 999 in live[0]["chunk_ids"]
+
+
+def test_rebuild_skips_chunks_parked_by_compaction(spark, tmp_path):
+    """Compaction parks its inputs for deferred deletion; a manifest loss
+    inside the grace period takes ``_retired.json`` with it, and the
+    rebuild must still register only the compacted output."""
+    from influxdb_iox_spark.plans.reorg import compact_chunks
+
+    store = _store(tmp_path, "posix")
+    _populate(spark, store)
+    inputs = store.manifest("cpu")
+    out = compact_chunks(spark, store, "cpu", CPU)
+    assert all(os.path.isdir(os.path.join(store.base_dir, c.path)) for c in inputs)
+
+    before = _scan_rows(spark, store)
+    store.wipe_manifest("cpu")
+    rebuild_manifest(store)
+    assert [c.chunk_id for c in store.manifest("cpu")] == [out.chunk_id]
+    assert _scan_rows(spark, store) == before
