@@ -42,7 +42,11 @@ def _build_parser() -> argparse.ArgumentParser:
 
     run = sub.add_parser("run", help="run the server (gRPC + HTTP)")
     run.add_argument("--base-dir", required=True)
-    run.add_argument("--grpc-port", type=int, default=0)
+    run.add_argument(
+        "--grpc-port", type=int, default=0,
+        help="port for the h2c gRPC endpoint: every service on its true "
+        "tonic method path, Arrow Flight included (0 = ephemeral)",
+    )
     run.add_argument("--http-port", type=int, default=0)
     run.add_argument("--cpus", default=None)
     run.add_argument(
@@ -55,11 +59,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "--conf", action="append", default=[], metavar="KEY=VALUE",
         help="extra Spark conf, repeatable (executor memory/instances, "
         "shuffle partitions, cloud-store credentials, …)",
-    )
-    run.add_argument(
-        "--grpc-h2-port", type=int, default=0,
-        help="port for the h2c gRPC endpoint (true tonic method paths, "
-        "no grpcio; 0 = ephemeral)",
     )
     run.add_argument(
         "--once", action="store_true",
@@ -203,8 +202,8 @@ def main(argv: list[str] | None = None, out=None) -> int:
     args = _build_parser().parse_args(argv)
 
     if args.command == "run":
+        from influxdb_iox_spark.rpc_h2 import GrpcH2Server
         from influxdb_iox_spark.rpc_management import (
-            IoxGrpcServer,
             IoxMultiDbHttpServer,
             IoxServer,
         )
@@ -226,18 +225,12 @@ def main(argv: list[str] | None = None, out=None) -> int:
         # perform_replay): reading databases catch up to their topics so
         # the first query never sees a pre-crash snapshot
         server.perform_replay()
-        grpc = IoxGrpcServer(
-            server, location=f"grpc://127.0.0.1:{args.grpc_port}"
-        )
-        from influxdb_iox_spark.rpc_h2 import GrpcH2Server
-
-        grpc_h2 = GrpcH2Server(server, port=args.grpc_h2_port)
+        grpc = GrpcH2Server(server, port=args.grpc_port)
         http = IoxMultiDbHttpServer(server)
         http_port = http.start(port=args.http_port)
         print(
             json.dumps(
-                {"grpc_port": grpc.port, "grpc_h2_port": grpc_h2.port,
-                 "http_port": http_port,
+                {"grpc_port": grpc.port, "http_port": http_port,
                  "databases": sorted(server.databases),
                  "master": spark.conf.get("spark.master"),
                  "conf": {k: spark.conf.get(k) for k in sorted(extra_conf)}}
@@ -247,7 +240,6 @@ def main(argv: list[str] | None = None, out=None) -> int:
         )
         if args.once:
             http.stop()
-            grpc_h2.shutdown()
             grpc.shutdown()
             return 0
         try:  # pragma: no cover - interactive serve loop

@@ -5,8 +5,9 @@ management, operations, write, and Flight sub-clients behind one
 connection; influxdb2_client speaks the v2 HTTP write/query API.  This
 facade wraps our transports the same way:
 
-- gRPC socket (rpc_management.IoxGrpcServer): ManagementService,
-  WriteService, longrunning Operations, and the Storage data plane
+- the gRPC port (rpc_h2.GrpcH2Server, one h2c connection through
+  rpc_h2.GrpcH2Client): ManagementService, WriteService, longrunning
+  Operations, and Arrow Flight DoGet
 - HTTP endpoint (http_api.IoxHttpServer): v2 write + SQL query + metrics
 
 Every method is a thin typed wrapper over the protobuf/HTTP request the
@@ -16,9 +17,19 @@ request shaping, so the client can never drift from the wire tests.
 
 from __future__ import annotations
 
+import functools
 import json
 import urllib.parse
 import urllib.request
+
+
+@functools.cache
+def _service_paths() -> dict[str, tuple[str, dict]]:
+    """Service short name ('management', 'write', 'pb_write', 'testing',
+    'operations') → (tonic service path, method schemas)."""
+    from influxdb_iox_spark.rpc_management import SERVICE_PATHS
+
+    return {short: (path, methods) for path, (short, methods) in SERVICE_PATHS.items()}
 
 
 class IoxClient:
@@ -28,25 +39,27 @@ class IoxClient:
         http_url: str | None = None,
         host: str = "127.0.0.1",
     ):
-        self._control = None
-        self._storage = None
+        self._grpc = None
         if grpc_port is not None:
-            from influxdb_iox_spark.rpc_management import ControlClient
-            from influxdb_iox_spark.rpc_storage import StorageClient
+            from influxdb_iox_spark.rpc_h2 import GrpcH2Client
 
-            self._control = ControlClient(grpc_port, host)
-            self._storage = StorageClient(grpc_port, host)
+            self._grpc = GrpcH2Client(grpc_port, host)
         self._http_url = http_url.rstrip("/") if http_url else None
 
     def close(self) -> None:
-        if self._control is not None:
-            self._control.close()
-        if self._storage is not None:
-            self._storage.close()
+        if self._grpc is not None:
+            self._grpc.close()
+
+    def call(self, service: str, method: str, request: dict) -> dict:
+        """One unary RPC by service short name; raises RuntimeError
+        carrying the grpc-status and message on failure."""
+        path, methods = _service_paths()[service]
+        req_schema, resp_schema = methods[method]
+        return self._grpc.call(f"/{path}/{method}", request, req_schema, resp_schema)
 
     # -- management --------------------------------------------------------
     def _mgmt(self, method: str, req: dict) -> dict:
-        return self._control.call("management", method, req)
+        return self.call("management", method, req)
 
     def create_database(
         self,
@@ -174,8 +187,8 @@ class IoxClient:
         contains '_', so the HTTP path takes explicit org/bucket
         parameters; the db_name split fallback is first-underscore and
         only safe for underscore-free orgs."""
-        if self._control is not None:
-            out = self._control.call(
+        if self._grpc is not None:
+            out = self.call(
                 "write", "Write", {"db_name": db_name, "lp_data": lp_data}
             )
             return out.get("lines_written", 0)
@@ -204,35 +217,41 @@ class IoxClient:
 
     # -- operations --------------------------------------------------------
     def list_operations(self) -> list[dict]:
-        out = self._control.call("operations", "ListOperations", {})
+        out = self.call("operations", "ListOperations", {})
         return out.get("operations") or []
 
     def get_operation(self, name: str) -> dict:
-        return self._control.call("operations", "GetOperation", {"name": name})
+        return self.call("operations", "GetOperation", {"name": name})
 
     def cancel_operation(self, name: str) -> None:
-        self._control.call("operations", "CancelOperation", {"name": name})
+        self.call("operations", "CancelOperation", {"name": name})
 
     def wait_operation(self, name: str) -> dict:
-        return self._control.call("operations", "WaitOperation", {"name": name})
+        return self.call("operations", "WaitOperation", {"name": name})
 
     def create_dummy_job(self, nanos: list[int]) -> dict:
         return self._mgmt("CreateDummyJob", {"nanos": list(nanos)})["operation"]
 
     def query_flight(self, db_name: str, sql: str):
-        """SQL over Arrow Flight do_get on the gRPC socket — the data-plane
+        """SQL over Arrow Flight DoGet on the gRPC port — the data-plane
         result path (record batches, no JSON row cap); returns a pyarrow
         Table."""
-        import pyarrow.flight as flight
-
+        from influxdb_iox_spark.protowire import encode_message
         from influxdb_iox_spark.rpc_flight import flight_ticket
-
-        if self._storage is None:
-            raise ValueError("query_flight requires grpc_port")
-        reader = self._storage._client.do_get(
-            flight.Ticket(flight_ticket(db_name, sql))
+        from influxdb_iox_spark.rpc_h2 import (
+            FLIGHT_SERVICE,
+            FLIGHT_TICKET,
+            flight_data_to_table,
         )
-        return reader.read_all()
+
+        if self._grpc is None:
+            raise ValueError("query_flight requires grpc_port")
+        ticket = encode_message(
+            {"ticket": flight_ticket(db_name, sql)}, FLIGHT_TICKET
+        )
+        return flight_data_to_table(
+            self._grpc.call_ok(f"/{FLIGHT_SERVICE}/DoGet", ticket)
+        )
 
     # -- query (HTTP SQL) --------------------------------------------------
     def query(self, db_name: str, sql: str, fmt: str = "json"):

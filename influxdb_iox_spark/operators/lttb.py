@@ -92,8 +92,14 @@ def lttb_downsample(
     v_dbl = F.col(value_col).cast("double")
     # in-plan guard: a value past the µ-unit long range must raise, not
     # saturate the cast (raise_error rides inside the expression tree so
-    # column pruning can never drop it)
+    # column pruning can never drop it); a NULL value gets its own raise,
+    # since its comparison is NULL and would fall through to the range one
     vm = F.when(
+        v_dbl.isNull(),
+        F.raise_error(
+            F.lit(f"lttb_downsample: {value_col} must be non-null")
+        ).cast("long"),
+    ).when(
         F.abs(v_dbl) <= F.lit(_V_MAX),
         F.round(v_dbl * 1_000_000).cast("long"),
     ).otherwise(

@@ -25,8 +25,9 @@ This module is the Python twin over our control plane:
   hosts it.  Routing failures raise the reference's error shape
   ("Cannot route request: ...").
 - ``QueryRouter.query`` executes the routed call: locally via the SQL
-  frontend, remotely via Arrow Flight do_get on the peer's gRPC port
-  (the data-plane path — record batches, not JSON rows).
+  frontend, remotely via ``IoxClient.query_flight``: an Arrow Flight
+  DoGet on the peer's h2c gRPC port (the data-plane path — record
+  batches, not JSON rows).
 
 Scale note: the router is control-plane only — a routed query's result
 flows back as Arrow batches and is NOT re-planned through Spark here.

@@ -1,62 +1,20 @@
-"""Arrow Flight do_get: SQL in a ticket, record batches out.
+"""The Arrow Flight ``ReadInfo`` ticket: SQL in a ticket, record batches out.
 
 Reference: /root/reference/src/influxdb_ioxd/rpc/flight.rs — the Ticket body
 is JSON ``{"database_name": ..., "sql_query": ...}`` (:113-118 ReadInfo);
 ``do_get`` (:158-211) plans the SQL, executes, and streams the result as a
 schema message followed by record batches.
 
-Spark-first: the query runs through ``Database.query`` (the dedup-correct
-SQL surface); the result ships as Arrow via ``DataFrame.toArrow`` into
-pyarrow's Flight server, which handles the IPC framing the reference builds
-by hand.  Like the reference (its TODO at :157), results are collected then
-streamed — the transport is the client-facing data plane, not an intra-query
-exchange.
+``rpc_h2.GrpcH2Server`` serves ``FlightService/DoGet`` with this ticket on
+the one gRPC port, next to the management, write, operations and storage
+services.  Like the reference (its TODO at :157), results are collected
+then streamed — the transport is the client-facing data plane, not an
+intra-query exchange.
 """
 
 from __future__ import annotations
 
 import json
-
-try:
-    import pyarrow.flight as _flight
-
-    _FLIGHT_AVAILABLE = True
-except ImportError:  # pragma: no cover - flight is compiled into our pyarrow
-    _flight = None
-    _FLIGHT_AVAILABLE = False
-
-from influxdb_iox_spark.database import Database
-
-if _FLIGHT_AVAILABLE:
-
-    class IoxFlightServer(_flight.FlightServerBase):
-        """Single-database Flight endpoint (grpc://host:port, port 0 = pick)."""
-
-        def __init__(
-            self,
-            database: Database,
-            db_name: str = "org_bucket",
-            location: str = "grpc://127.0.0.1:0",
-        ):
-            super().__init__(location)
-            self.database = database
-            self.db_name = db_name
-
-        def do_get(self, context, ticket):
-            try:
-                info = json.loads(ticket.ticket.decode("utf-8"))
-            except (UnicodeDecodeError, json.JSONDecodeError) as e:
-                raise _flight.FlightServerError(f"invalid ticket: {e}") from e
-            name = info.get("database_name")
-            sql = info.get("sql_query")
-            if not name or sql is None:
-                raise _flight.FlightServerError(
-                    "ticket must carry database_name and sql_query"
-                )
-            if name != self.db_name:
-                raise _flight.FlightUnavailableError(f"database {name!r} not found")
-            table = self.database.query(sql).toArrow()
-            return _flight.RecordBatchStream(table)
 
 
 def flight_ticket(database_name: str, sql_query: str) -> bytes:
@@ -64,3 +22,19 @@ def flight_ticket(database_name: str, sql_query: str) -> bytes:
     return json.dumps(
         {"database_name": database_name, "sql_query": sql_query}
     ).encode("utf-8")
+
+
+def read_info(ticket: bytes) -> tuple[str, str]:
+    """Ticket body → (database_name, sql_query); raises ValueError naming
+    what is wrong with a malformed ticket."""
+    try:
+        info = json.loads(ticket.decode("utf-8"))
+    except (UnicodeDecodeError, json.JSONDecodeError) as e:
+        raise ValueError(f"invalid ticket: {e}") from e
+    if (
+        not isinstance(info, dict)
+        or not info.get("database_name")
+        or info.get("sql_query") is None
+    ):
+        raise ValueError("ticket must carry database_name and sql_query")
+    return info["database_name"], info["sql_query"]

@@ -1,29 +1,28 @@
-"""gRPC endpoint on a plain HTTP/2 (h2c) socket — true service paths.
+"""The gRPC server: every service on one plain HTTP/2 (h2c) port.
 
-The reference's tonic router serves
-``/influxdata.iox.management.v1.ManagementService/CreateDatabase`` et
-al. on one gRPC port (src/influxdb_ioxd/rpc.rs add_service × 4).  The
-Flight-DoAction transport (rpc_management.IoxGrpcServer) carries
-byte-compatible protobuf payloads but NOT the real method paths — a
-stock gRPC client cannot dial it.  This module closes that gap without
-grpcio: h2wire's RFC 7540/7541 implementation underneath, the gRPC
-HTTP/2 protocol mapping on top (grpc.io PROTOCOL-HTTP2):
+The reference's tonic router serves Storage, Management, Write,
+Operations and Arrow Flight on one gRPC port (src/influxdb_ioxd/rpc.rs
+add_service × 4), each on its true method path
+(``/influxdata.iox.management.v1.ManagementService/CreateDatabase`` et
+al.), so stock gRPC and Flight clients can dial it.  This module is that
+port, without grpcio: h2wire's RFC 7540/7541 implementation underneath,
+the gRPC HTTP/2 protocol mapping on top (grpc.io PROTOCOL-HTTP2):
 
 - request: POST ``/<package>.<Service>/<Method>``,
   ``content-type: application/grpc``, body = length-prefixed messages
   (1-byte compressed flag + u32 big-endian length per message)
 - response: HEADERS (:status 200) → DATA message frames → trailers
   HEADERS carrying ``grpc-status`` / ``grpc-message`` (server-streaming
-  RPCs emit several DATA messages — the storage Read* RPCs)
-- errors: trailers with the canonical numeric status codes
+  RPCs emit several DATA messages — the storage Read* RPCs and DoGet)
+- errors: trailers with the canonical numeric status codes; a handler
+  failure answers on that channel and the connection keeps serving
 
-Dispatch reuses the exact handler tables the Flight transport uses
-(rpc_management.route_action → ManagementService / WriteService /
-OperationsService / StorageService), so the two transports can never
-diverge in behavior — only in framing.
+Dispatch routes the path (rpc_management.route_action) to the
+ManagementService / WriteService / OperationsService handlers, to
+rpc_storage.StorageService, or to the Flight DoGet / Handshake below.
 
-The in-module GrpcH2Client exists for tests and tooling; it
-Huffman-encodes its header literals specifically so the server's HPACK
+GrpcH2Client is the package's gRPC client (IoxClient speaks through
+it); it Huffman-encodes its header literals so the server's HPACK
 Huffman decode path is exercised by every call.
 """
 
@@ -42,8 +41,8 @@ from influxdb_iox_spark.protowire import Field, decode_message, encode_message
 # storage / operations on ONE gRPC socket (src/influxdb_ioxd/rpc.rs
 # add_service(FlightServer …)).  Flight is itself plain gRPC, so the h2
 # endpoint hosts /arrow.flight.protocol.FlightService/{Handshake,DoGet}
-# with the same JSON ReadInfo ticket contract as rpc_flight.py — one
-# endpoint serves queries AND management, like the reference.
+# with the JSON ReadInfo ticket of rpc_flight.py — one endpoint serves
+# queries AND management, like the reference.
 # Message schemas from the public arrow/flight/Flight.proto.
 
 FLIGHT_SERVICE = "arrow.flight.protocol.FlightService"
@@ -136,9 +135,32 @@ def parse_grpc_messages(body: bytes) -> list[bytes]:
         if body[pos] != 0:
             raise ValueError("compressed gRPC messages are not supported")
         (n,) = struct.unpack_from(">I", body, pos + 1)
+        if pos + 5 + n > len(body):
+            raise struct.error(
+                f"message declares {n} bytes, {len(body) - pos - 5} present"
+            )
         out.append(body[pos + 5 : pos + 5 + n])
         pos += 5 + n
     return out
+
+
+def _grpc_status(e: Exception) -> tuple[int, str]:
+    """A handler's exception → (gRPC status code, message) for the
+    trailers: a client-side fault (bad request, bad SQL) is
+    InvalidArgument, anything else Internal, both with the message."""
+    from pyspark.errors import AnalysisException
+
+    from influxdb_iox_spark.rpc_management import GrpcStatusError
+    from influxdb_iox_spark.rpc_storage import StorageRpcError
+
+    if isinstance(e, GrpcStatusError):
+        return GRPC_STATUS.get(e.code, 2), str(e)
+    if isinstance(e, struct.error):
+        # truncated gRPC body: the length prefix or payload is cut off
+        return GRPC_STATUS["InvalidArgument"], f"malformed gRPC message: {e}"
+    if isinstance(e, (StorageRpcError, AnalysisException)):
+        return GRPC_STATUS["InvalidArgument"], str(e)
+    return GRPC_STATUS["Internal"], str(e) or type(e).__name__
 
 
 class GrpcH2Server:
@@ -151,8 +173,8 @@ class GrpcH2Server:
             PBWriteService,
             TestingService,
             WriteService,
-            _LiveStorageService,
         )
+        from influxdb_iox_spark.rpc_storage import StorageService
 
         self.iox = iox_server
         self.services = {
@@ -162,7 +184,7 @@ class GrpcH2Server:
             "testing": TestingService(),
             "operations": OperationsService(iox_server),
         }
-        self.storage = _LiveStorageService(iox_server)
+        self.storage = StorageService(iox_server)
         self._sock = socket.create_server((host, port))
         self.port = self._sock.getsockname()[1]
         self._closing = False
@@ -204,15 +226,15 @@ class GrpcH2Server:
 
     # -- gRPC dispatch ------------------------------------------------------
     def _dispatch(self, cx: "_H2Connection", sid: int, st: dict) -> None:
-        from influxdb_iox_spark.rpc_management import (
-            _SHORT_SERVICE,
-            DATA_PLANE_SERVICES,
-            GrpcStatusError,
-            route_action,
-        )
-        from influxdb_iox_spark.rpc_storage import StorageRpcError
-
-        def trailers_only(code: int, message: str) -> None:
+        headers = dict(st.get("headers") or [])
+        try:
+            messages = parse_grpc_messages(st["data"])
+            responses = self._call(
+                unquote(headers.get(":path", "")),
+                messages[0] if messages else b"",
+            )
+        except Exception as e:
+            code, message = _grpc_status(e)
             block = cx.encoder.encode(
                 [
                     (":status", "200"),
@@ -224,57 +246,6 @@ class GrpcH2Server:
             cx.send(
                 h2.HEADERS, h2.FLAG_END_HEADERS | h2.FLAG_END_STREAM, sid, block
             )
-
-        headers = dict(st.get("headers") or [])
-        path = unquote(headers.get(":path", ""))
-        try:
-            stripped = path.lstrip("/")
-            messages = parse_grpc_messages(st["data"])
-            request = messages[0] if messages else b""
-            if stripped.startswith(FLIGHT_SERVICE + "/"):
-                responses = self._flight_call(
-                    stripped.rsplit("/", 1)[1], request
-                )
-            elif (sm := route_action(stripped))[0] == "storage":
-                method = sm[1]
-                if not self.iox.serving:
-                    raise GrpcStatusError(
-                        "Unavailable", "server is not serving data plane"
-                    )
-                responses = list(self.storage.call(method, request))
-            else:
-                service, method = sm
-                if service in DATA_PLANE_SERVICES and not self.iox.serving:
-                    raise GrpcStatusError(
-                        "Unavailable", "server is not serving data plane"
-                    )
-                methods = _SHORT_SERVICE[service]
-                if method not in methods:
-                    raise GrpcStatusError(
-                        "Unimplemented",
-                        f"unknown method {method!r} of {service}",
-                    )
-                req_schema, resp_schema = methods[method]
-                resp = getattr(self.services[service], method)(
-                    decode_message(request, req_schema)
-                )
-                responses = [encode_message(resp, resp_schema)]
-        except GrpcStatusError as e:
-            trailers_only(GRPC_STATUS.get(e.code, 2), str(e))
-            return
-        except StorageRpcError as e:
-            trailers_only(GRPC_STATUS["InvalidArgument"], str(e))
-            return
-        except struct.error as e:
-            # truncated/short gRPC message body (length prefix or payload
-            # cut off): answer on the error channel instead of letting
-            # the serve thread die with an unhandled traceback
-            trailers_only(
-                GRPC_STATUS["InvalidArgument"], f"malformed gRPC message: {e}"
-            )
-            return
-        except ValueError as e:
-            trailers_only(GRPC_STATUS["Internal"], str(e))
             return
 
         head = cx.encoder.encode(
@@ -285,14 +256,40 @@ class GrpcH2Server:
         trailers = cx.encoder.encode([("grpc-status", "0")])
         cx.send(h2.HEADERS, h2.FLAG_END_HEADERS | h2.FLAG_END_STREAM, sid, trailers)
 
-    def _flight_call(self, method: str, request: bytes) -> list[bytes]:
-        """FlightService over this port: the DoGet ticket contract is
-        rpc_flight.py's (JSON ReadInfo — flight.rs:113-118), served from
-        the server's LIVE database dict; Handshake echoes (no auth, like
-        the reference's default).  The response stream is one FlightData
-        per IPC message (schema, then batches)."""
-        import json as _json
+    def _call(self, path: str, request: bytes) -> list[bytes]:
+        """One RPC: method path + request message → response messages."""
+        from influxdb_iox_spark.rpc_management import (
+            _SHORT_SERVICE,
+            DATA_PLANE_SERVICES,
+            GrpcStatusError,
+            route_action,
+        )
 
+        if path.lstrip("/").startswith(FLIGHT_SERVICE + "/"):
+            return self._flight_call(path.rsplit("/", 1)[1], request)
+        service, method = route_action(path)
+        if service in DATA_PLANE_SERVICES and not self.iox.serving:
+            raise GrpcStatusError("Unavailable", "server is not serving data plane")
+        if service == "storage":
+            return list(self.storage.call(method, request))
+        methods = _SHORT_SERVICE[service]
+        if method not in methods:
+            raise GrpcStatusError(
+                "Unimplemented", f"unknown method {method!r} of {service}"
+            )
+        req_schema, resp_schema = methods[method]
+        resp = getattr(self.services[service], method)(
+            decode_message(request, req_schema)
+        )
+        return [encode_message(resp, resp_schema)]
+
+    def _flight_call(self, method: str, request: bytes) -> list[bytes]:
+        """FlightService over this port: DoGet takes rpc_flight's JSON
+        ReadInfo ticket (flight.rs:113-118) and runs it against the
+        server's LIVE database dict; Handshake echoes (no auth, like the
+        reference's default).  The response stream is one FlightData per
+        IPC message (schema, then batches)."""
+        from influxdb_iox_spark.rpc_flight import read_info
         from influxdb_iox_spark.rpc_management import GrpcStatusError
 
         if method == "Handshake":
@@ -315,15 +312,9 @@ class GrpcH2Server:
             raise GrpcStatusError("Unavailable", "server is not serving data plane")
         ticket = bytes(decode_message(request, FLIGHT_TICKET).get("ticket") or b"")
         try:
-            info = _json.loads(ticket.decode("utf-8"))
-        except (UnicodeDecodeError, _json.JSONDecodeError) as e:
-            raise GrpcStatusError("InvalidArgument", f"invalid ticket: {e}")
-        name = info.get("database_name")
-        sql = info.get("sql_query")
-        if not name or sql is None:
-            raise GrpcStatusError(
-                "InvalidArgument", "ticket must carry database_name and sql_query"
-            )
+            name, sql = read_info(ticket)
+        except ValueError as e:
+            raise GrpcStatusError("InvalidArgument", str(e)) from e
         md = self.iox.databases.get(name)
         if md is None:
             raise GrpcStatusError("NotFound", f"database {name!r} not found")
@@ -458,7 +449,7 @@ class _H2Connection:
 
 
 class GrpcH2Client:
-    """Minimal gRPC h2c client (tests/tooling).  One connection, calls
+    """Minimal gRPC h2c client.  One connection, calls
     serialized; header literals are HUFFMAN-coded so every call
     exercises the server's HPACK Huffman decoder."""
 
@@ -499,14 +490,18 @@ class GrpcH2Client:
             self._sock.sendall(
                 h2.encode_frame(h2.HEADERS, h2.FLAG_END_HEADERS, sid, block)
             )
-            self._sock.sendall(
-                h2.encode_frame(
-                    h2.DATA,
-                    h2.FLAG_END_STREAM,
-                    sid,
-                    frame_grpc_messages([request]),
+            # DATA frames within the default SETTINGS_MAX_FRAME_SIZE
+            data = frame_grpc_messages([request])
+            for pos in range(0, len(data), 16384):
+                last = pos + 16384 >= len(data)
+                self._sock.sendall(
+                    h2.encode_frame(
+                        h2.DATA,
+                        h2.FLAG_END_STREAM if last else 0,
+                        sid,
+                        data[pos : pos + 16384],
+                    )
                 )
-            )
             body = b""
             trailers: dict = {}
             saw_headers = False
@@ -556,13 +551,18 @@ class GrpcH2Client:
                         break
             return parse_grpc_messages(body), trailers
 
-    def call(self, path: str, request: dict, req_schema, resp_schema) -> dict:
-        """Unary convenience: encode/decode via protowire schemas; raises
-        on non-zero grpc-status with the server's message."""
-        msgs, trailers = self.call_raw(path, encode_message(request, req_schema))
+    def call_ok(self, path: str, request: bytes) -> list[bytes]:
+        """Response messages; raises RuntimeError on a non-zero
+        grpc-status, with the server's message."""
+        msgs, trailers = self.call_raw(path, request)
         status = int(trailers.get("grpc-status", "2"))
         if status != 0:
             raise RuntimeError(
                 f"grpc-status {status}: {trailers.get('grpc-message', '')}"
             )
+        return msgs
+
+    def call(self, path: str, request: dict, req_schema, resp_schema) -> dict:
+        """Unary convenience: encode/decode via protowire schemas."""
+        msgs = self.call_ok(path, encode_message(request, req_schema))
         return decode_message(msgs[0], resp_schema) if msgs else {}

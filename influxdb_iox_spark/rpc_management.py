@@ -1,12 +1,12 @@
-"""Management / Write / Operations gRPC services + the combined server.
+"""Management / Write / Operations gRPC services and the IoxServer they drive.
 
 The reference serves four gRPC services on one tonic socket
 (src/influxdb_ioxd/rpc.rs): Storage (data plane), ManagementService,
-WriteService, and google.longrunning Operations.  This module adds the
-three control-plane services next to rpc_storage.StorageService and hosts
-all of them on ONE pyarrow Flight socket (a real gRPC server), with
-protobuf request/response bytes via the protowire codec — the same
-transport trick rpc_storage.py documents.
+WriteService, and google.longrunning Operations.  This module holds the
+three control-plane service handlers (dict request in, dict response
+out, protobuf bytes via the protowire codec) and the method-path routing
+table; ``rpc_h2.GrpcH2Server`` serves them, with rpc_storage.StorageService
+and Arrow Flight, on one h2c gRPC port.
 
 Semantics ported from:
 
@@ -50,7 +50,7 @@ from pyspark.sql import SparkSession
 
 from influxdb_iox_spark import management_proto as mp
 from influxdb_iox_spark.database import Database
-from influxdb_iox_spark.protowire import decode_message, encode_message
+from influxdb_iox_spark.protowire import encode_message
 from influxdb_iox_spark.schema import InfluxColumnType, IoxSchema
 from influxdb_iox_spark.sources.line_protocol import LineProtocolError, parse_lines
 from influxdb_iox_spark.sources.store import TableStore
@@ -1360,7 +1360,7 @@ class OperationsService:
         return encode_operation(db, rec)
 
 
-# -- combined transport -----------------------------------------------------
+# -- service routing (served by rpc_h2.GrpcH2Server) ------------------------
 
 SERVICE_PATHS = {
     "influxdata.iox.management.v1.ManagementService": (
@@ -1372,157 +1372,23 @@ SERVICE_PATHS = {
     "google.longrunning.Operations": ("operations", mp.OPERATIONS_METHODS),
 }
 _SHORT_SERVICE = {short: methods for short, methods in SERVICE_PATHS.values()}
+STORAGE_PATH = "influxdata.platform.storage.Storage"
 
-#: Write RPCs are data plane (serving-readiness gated); management and
-#: operations always answer (server/src/lib.rs serving readiness scope)
-DATA_PLANE_SERVICES = {"write", "pb_write"}
-
-
-def route_action(action_type: str) -> tuple[str, str]:
-    """'<pkg>.<Service>/<Method>' | '<short>.<Method>' | bare storage RPC
-    → (service_short_name, method)."""
-    if "/" in action_type:
-        path, method = action_type.rsplit("/", 1)
-        if path in SERVICE_PATHS:
-            return SERVICE_PATHS[path][0], method
-        if path.endswith(("Storage", "storage")):
-            return "storage", method
-        raise GrpcStatusError("Unimplemented", f"unknown service {path!r}")
-    head, _, tail = action_type.partition(".")
-    if head in _SHORT_SERVICE and tail:
-        return head, tail
-    return "storage", action_type
+#: Write and storage RPCs are data plane (serving-readiness gated);
+#: management and operations always answer (server/src/lib.rs serving
+#: readiness scope)
+DATA_PLANE_SERVICES = {"write", "pb_write", "storage"}
 
 
-try:
-    import pyarrow.flight as _flight
-
-    _FLIGHT_AVAILABLE = True
-except ImportError:  # pragma: no cover
-    _flight = None
-    _FLIGHT_AVAILABLE = False
-
-
-if _FLIGHT_AVAILABLE:
-    from influxdb_iox_spark.rpc import InfluxRpc
-    from influxdb_iox_spark.rpc_storage import StorageRpcError, StorageService
-    from influxdb_iox_spark import storage_proto as sp
-
-    class _LiveStorageService(StorageService):
-        """StorageService over the server's LIVE database dict — databases
-        created through the management API are queryable immediately."""
-
-        def __init__(self, server: IoxServer):
-            self.server = server
-            self.rpcs = {}
-
-        def _rpc(self, req: dict, field: str = "read_source") -> InfluxRpc:
-            name = sp.read_source_db(req, field)
-            md = self.server.databases.get(name)
-            if md is None:
-                raise StorageRpcError(f"database {name!r} not found")
-            rpc = self.rpcs.get(name)
-            if rpc is None or rpc.db is not md.database:
-                rpc = InfluxRpc(md.database)
-                self.rpcs[name] = rpc
-            return rpc
-
-    class IoxGrpcServer(_flight.FlightServerBase):
-        """All four services on one gRPC socket, like the reference's
-        tonic router (src/influxdb_ioxd/rpc.rs add_service × 4)."""
-
-        def __init__(self, server: IoxServer, location: str = "grpc://127.0.0.1:0"):
-            super().__init__(location)
-            self.server = server
-            self.services = {
-                "management": ManagementService(server),
-                "write": WriteService(server),
-                "pb_write": PBWriteService(server),
-                "testing": TestingService(),
-                "operations": OperationsService(server),
-            }
-            self.storage = _LiveStorageService(server)
-
-        def list_actions(self, context):
-            out = [
-                (f"{path}/{m}", f"{short}.{m}")
-                for path, (short, methods) in SERVICE_PATHS.items()
-                for m in methods
-            ]
-            out += [
-                (name, f"storage.Storage/{name}") for name in StorageService.RPC_NAMES
-            ]
-            return out
-
-        def do_get(self, context, ticket):
-            """Flight do_get over the LIVE database set — the query data
-            plane on the same socket as the control services, like the
-            reference's single tonic port (JSON ReadInfo ticket,
-            flight.rs:113-118; single-db twin: rpc_flight.IoxFlightServer)."""
-            import json as _json
-
-            if not self.server.serving:
-                raise _flight.FlightUnavailableError(
-                    "server is not serving data plane"
-                )
-            try:
-                info = _json.loads(ticket.ticket.decode("utf-8"))
-            except (UnicodeDecodeError, _json.JSONDecodeError) as e:
-                raise _flight.FlightServerError(f"invalid ticket: {e}") from e
-            name = info.get("database_name")
-            sql = info.get("sql_query")
-            if not name or sql is None:
-                raise _flight.FlightServerError(
-                    "ticket must carry database_name and sql_query"
-                )
-            md = self.server.databases.get(name)
-            if md is None:
-                raise _flight.FlightUnavailableError(f"database {name!r} not found")
-            return _flight.RecordBatchStream(md.database.query(sql).toArrow())
-
-        def do_action(self, context, action):
-            try:
-                service, method = route_action(action.type)
-                body = action.body.to_pybytes()
-                if service == "storage":
-                    if not self.server.serving:
-                        raise GrpcStatusError(
-                            "Unavailable", "server is not serving data plane"
-                        )
-                    yield from self.storage.call(method, body)
-                    return
-                svc = self.services[service]
-                methods = _SHORT_SERVICE[service]
-                if method not in methods:
-                    raise GrpcStatusError(
-                        "Unimplemented", f"unknown method {method!r} of {service}"
-                    )
-                req_schema, resp_schema = methods[method]
-                resp = getattr(svc, method)(decode_message(body, req_schema))
-                yield _flight.Result(encode_message(resp, resp_schema))
-            except GrpcStatusError as e:
-                if e.code == "Unavailable":
-                    raise _flight.FlightUnavailableError(str(e)) from e
-                raise _flight.FlightServerError(str(e)) from e
-            except StorageRpcError as e:
-                raise _flight.FlightServerError(str(e)) from e
-
-    class ControlClient:
-        """Client for the three control-plane services (test side)."""
-
-        def __init__(self, port: int, host: str = "127.0.0.1"):
-            self._client = _flight.connect(f"grpc://{host}:{port}")
-
-        def call(self, service: str, method: str, request: dict) -> dict:
-            req_schema, resp_schema = _SHORT_SERVICE[service][method]
-            action = _flight.Action(
-                f"{service}.{method}", encode_message(request, req_schema)
-            )
-            results = list(self._client.do_action(action))
-            return decode_message(results[0].body.to_pybytes(), resp_schema) if results else {}
-
-        def close(self):
-            self._client.close()
+def route_action(path: str) -> tuple[str, str]:
+    """gRPC method path '/<pkg>.<Service>/<Method>' → (service short
+    name, method); the storage service's short name is 'storage'."""
+    service, _, method = path.lstrip("/").rpartition("/")
+    if service == STORAGE_PATH:
+        return "storage", method
+    if service in SERVICE_PATHS:
+        return SERVICE_PATHS[service][0], method
+    raise GrpcStatusError("Unimplemented", f"unknown service {service!r}")
 
 
 # -- multi-database HTTP facade ---------------------------------------------

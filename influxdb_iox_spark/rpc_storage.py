@@ -1,20 +1,14 @@
-"""Storage-gRPC wire transport: the reference's Storage service served
-over Arrow Flight DoAction with protobuf request/response payloads.
+"""The reference's 11-RPC Storage service (the InfluxRPC data plane).
 
 Reference: /root/reference/generated_types/protos/influxdata/platform/
-storage/service.proto (the 11-RPC Storage service) routed exactly like
-src/influxdb_ioxd/rpc/storage/service.rs:218-771.  grpcio is unavailable
-here, but pyarrow's Flight server IS a gRPC server on a real socket — each
-Storage RPC maps to a Flight action whose type is the RPC name and whose
-body is the protobuf-encoded request (byte-compatible with the reference's
-protos via the protowire codec); each streamed response message comes back
-as one Flight Result payload, mirroring tonic's `stream ReadResponse`.
-
-The TRUE tonic method paths
-(``/influxdata.platform.storage.Storage/ReadFilter`` …) are also served,
-by ``rpc_h2.GrpcH2Server`` — a hand-rolled h2c gRPC endpoint (RFC
-7540/7541 in ``h2wire.py``) dispatching to this same StorageService, so
-the wire surface a stock storage client dials exists without grpcio.
+storage/service.proto, routed exactly like
+src/influxdb_ioxd/rpc/storage/service.rs:218-771.  ``StorageService`` is
+transport-independent: protobuf request bytes in (byte-compatible with the
+reference's protos via the protowire codec), an iterator of protobuf
+response messages out, mirroring tonic's ``stream ReadResponse``.
+``rpc_h2.GrpcH2Server`` serves it on the true tonic method paths
+(``/influxdata.platform.storage.Storage/ReadFilter`` …), next to the
+management services and Arrow Flight on one gRPC port.
 
 Semantics ported from service.rs:
 
@@ -28,22 +22,14 @@ Semantics ported from service.rs:
   error, service.rs:482-492) and \\xff (field names, service.rs:504-525)
 - ReadGroup rejects non-zero hints (service.rs:286-288); window aggregate
   requires exactly one Aggregate (expr.rs:31-33)
-- ReadSeriesCardinality is unimplemented, like service.rs:560-566
+- ReadSeriesCardinality answers the series count (unimplemented in
+  service.rs:560-566)
 - Capabilities returns the hard-coded map of service.rs:567-604
 """
 
 from __future__ import annotations
 
-try:
-    import pyarrow.flight as _flight
-
-    _FLIGHT_AVAILABLE = True
-except ImportError:  # pragma: no cover - flight ships with our pyarrow
-    _flight = None
-    _FLIGHT_AVAILABLE = False
-
 from influxdb_iox_spark import storage_proto as sp
-from influxdb_iox_spark.database import Database
 from influxdb_iox_spark.operators.series import Aggregate, frame_series
 from influxdb_iox_spark.protowire import decode_message, encode_message
 from influxdb_iox_spark.rpc import InfluxRpc
@@ -63,20 +49,24 @@ class StorageRpcError(Exception):
 
 
 class StorageService:
-    """Transport-independent request handling: protobuf request bytes in,
-    iterator of protobuf response-message bytes out.  The Flight server
-    below is a thin adapter; tests can call this directly for the
-    contract battery without a socket."""
+    """Request handling over an IoxServer's LIVE database dict — databases
+    created through the management API are queryable at once.  One
+    InfluxRpc per database is kept, and rebuilt when the database object
+    behind the name changes."""
 
-    def __init__(self, databases: dict[str, Database]):
-        self.rpcs = {name: InfluxRpc(db) for name, db in databases.items()}
+    def __init__(self, server):
+        self.server = server
+        self.rpcs: dict[str, InfluxRpc] = {}
 
     # -- helpers ----------------------------------------------------------
     def _rpc(self, req: dict, field: str = "read_source") -> InfluxRpc:
         name = sp.read_source_db(req, field)
-        rpc = self.rpcs.get(name)
-        if rpc is None:
+        md = self.server.databases.get(name)
+        if md is None:
             raise StorageRpcError(f"database {name!r} not found")
+        rpc = self.rpcs.get(name)
+        if rpc is None or rpc.db is not md.database:
+            rpc = self.rpcs[name] = InfluxRpc(md.database)
         return rpc
 
     @staticmethod
@@ -417,49 +407,3 @@ class _DictRow:
     def __getitem__(self, k):
         return self._d[k]
 
-
-if _FLIGHT_AVAILABLE:
-
-    class StorageFlightServer(_flight.FlightServerBase):
-        """The Storage service on a real gRPC socket (Flight DoAction).
-
-        ``list_actions`` advertises the 11 RPCs; ``do_action`` routes
-        ``action.type`` (the RPC name) to StorageService and streams each
-        protobuf response message as one Result payload."""
-
-        def __init__(
-            self,
-            databases: dict[str, Database],
-            location: str = "grpc://127.0.0.1:0",
-        ):
-            super().__init__(location)
-            self.service = StorageService(databases)
-
-        def list_actions(self, context):
-            return [(name, f"storage.Storage/{name}") for name in StorageService.RPC_NAMES]
-
-        def do_action(self, context, action):
-            try:
-                yield from self.service.call(
-                    action.type, action.body.to_pybytes()
-                )
-            except StorageRpcError as e:
-                raise _flight.FlightServerError(str(e)) from e
-
-    class StorageClient:
-        """Minimal client: encodes requests, calls the gRPC action, decodes
-        the streamed responses (the test-side of the contract)."""
-
-        def __init__(self, port: int, host: str = "127.0.0.1"):
-            self._client = _flight.connect(f"grpc://{host}:{port}")
-
-        def call_raw(self, rpc_name: str, body: bytes) -> list[bytes]:
-            action = _flight.Action(rpc_name, body)
-            return [r.body.to_pybytes() for r in self._client.do_action(action)]
-
-        def call(self, rpc_name: str, request: dict, req_schema, resp_schema) -> list[dict]:
-            out = self.call_raw(rpc_name, encode_message(request, req_schema))
-            return [decode_message(b, resp_schema) for b in out]
-
-        def close(self):
-            self._client.close()

@@ -262,16 +262,13 @@ def test_render_line_is_parse_inverse(meas, tags, fields, ts):
 
 
 def test_write_entry_rpc_end_to_end(spark, tmp_path):
-    pytest.importorskip("pyarrow.flight")
-    from influxdb_iox_spark.rpc_management import (
-        ControlClient,
-        IoxGrpcServer,
-        IoxServer,
-    )
+    from influxdb_iox_spark.client import IoxClient
+    from influxdb_iox_spark.rpc_h2 import GrpcH2Server
+    from influxdb_iox_spark.rpc_management import IoxServer
 
     server = IoxServer(spark, str(tmp_path / "srv"))
-    flight = IoxGrpcServer(server)
-    c = ControlClient(flight.port)
+    grpc = GrpcH2Server(server)
+    c = IoxClient(grpc_port=grpc.port)
     try:
         c.call(
             "management",
@@ -298,7 +295,7 @@ def test_write_entry_rpc_end_to_end(spark, tmp_path):
             c.call("write", "WriteEntry", {"db_name": "edb"})
     finally:
         c.close()
-        flight.shutdown()
+        grpc.shutdown()
 
 
 def test_u64_above_int64_rejected_at_row_bridge():

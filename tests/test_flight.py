@@ -1,4 +1,5 @@
-"""Arrow Flight do_get round trip (ref src/influxdb_ioxd/rpc/flight.rs:158)."""
+"""Arrow Flight do_get round trip (ref src/influxdb_ioxd/rpc/flight.rs:158),
+a stock pyarrow FlightClient against the h2c gRPC port."""
 
 from __future__ import annotations
 
@@ -6,25 +7,26 @@ import pytest
 
 pytest.importorskip("pyarrow.flight")
 
-from influxdb_iox_spark.database import Database
-from influxdb_iox_spark.rpc_flight import IoxFlightServer, flight_ticket
+from influxdb_iox_spark.rpc_flight import flight_ticket
+from influxdb_iox_spark.rpc_h2 import GrpcH2Server
+from influxdb_iox_spark.rpc_management import IoxServer
 from influxdb_iox_spark.schema import InfluxColumnType, IoxSchema
-from influxdb_iox_spark.sources.store import TableStore
 
 CPU = IoxSchema.build(["region"], {"user": InfluxColumnType.FIELD_FLOAT})
 
 
 @pytest.fixture()
 def server(spark, tmp_path):
-    store = TableStore(str(tmp_path / "flight_store"))
+    iox = IoxServer(spark, str(tmp_path / "flight_srv"))
+    iox.create_database({"name": "mydb"})
+    db = iox.db("mydb").database
     df = spark.createDataFrame(
         [("west", 23.2, 100), ("east", 5.0, 200)],
         "region string, user double, time long",
     )
-    store.write_chunk(df, "cpu", CPU)
-    db = Database("mydb", store, spark)
+    db.store.write_chunk(df, "cpu", CPU)
     db.register_table("cpu", CPU)
-    srv = IoxFlightServer(db, db_name="mydb")
+    srv = GrpcH2Server(iox)
     yield srv
     srv.shutdown()
 
@@ -45,16 +47,20 @@ def test_do_get_sql_roundtrip(server):
 
 
 def test_do_get_unknown_database_errors(server):
+    import pyarrow as pa
     import pyarrow.flight as fl
 
     client = fl.connect(f"grpc://127.0.0.1:{server.port}")
-    with pytest.raises(fl.FlightError):
+    # grpc-status 5 (NotFound) maps to ArrowKeyError in pyarrow
+    with pytest.raises(pa.lib.ArrowKeyError, match="'nope' not found"):
         client.do_get(fl.Ticket(flight_ticket("nope", "SELECT 1"))).read_all()
 
 
 def test_do_get_bad_ticket_errors(server):
+    import pyarrow as pa
     import pyarrow.flight as fl
 
     client = fl.connect(f"grpc://127.0.0.1:{server.port}")
-    with pytest.raises(fl.FlightError):
+    # grpc-status 3 (InvalidArgument) maps to ArrowInvalid in pyarrow
+    with pytest.raises(pa.ArrowInvalid, match="invalid ticket"):
         client.do_get(fl.Ticket(b"not json")).read_all()

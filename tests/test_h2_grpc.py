@@ -306,52 +306,96 @@ def test_large_streaming_response_respects_flow_control(h2_server):
 
 
 def test_truncated_grpc_body_answers_on_error_channel(h2_server):
-    """Review r6: a DATA body shorter than the 5-byte gRPC length prefix
-    must produce InvalidArgument trailers, not an unhandled serve-thread
-    traceback and a dead connection."""
+    """Review r6: a DATA body shorter than the 5-byte gRPC length prefix,
+    or shorter than the message length the prefix declares (here a
+    100-byte message cut after a complete protobuf field), must produce
+    InvalidArgument trailers, not an unhandled serve-thread traceback
+    and a dead connection, nor a cut-off request decoded and run."""
+    import struct
+
     from influxdb_iox_spark import h2wire as h2
+    from influxdb_iox_spark import management_proto as mp
     from influxdb_iox_spark.rpc_h2 import GRPC_STATUS
 
     _, _, c = h2_server
-    with c._lock:
-        sid = c._next_stream
-        c._next_stream += 2
-        block = c._encoder.encode(
-            [
-                (":method", "POST"),
-                (":scheme", "http"),
-                (":path", f"/{MGMT}/ListDatabases"),
-                (":authority", c._authority),
-                ("content-type", "application/grpc"),
-                ("te", "trailers"),
-            ]
+    for body in (b"\x00\x00\x00", b"\x00" + struct.pack(">I", 100) + b"\x0a\x03abc"):
+        with c._lock:
+            sid = c._next_stream
+            c._next_stream += 2
+            block = c._encoder.encode(
+                [
+                    (":method", "POST"),
+                    (":scheme", "http"),
+                    (":path", f"/{MGMT}/ListDatabases"),
+                    (":authority", c._authority),
+                    ("content-type", "application/grpc"),
+                    ("te", "trailers"),
+                ]
+            )
+            c._sock.sendall(
+                h2.encode_frame(h2.HEADERS, h2.FLAG_END_HEADERS, sid, block)
+            )
+            c._sock.sendall(h2.encode_frame(h2.DATA, h2.FLAG_END_STREAM, sid, body))
+            trailers = {}
+            while True:
+                ftype, flags, fsid, payload = h2.read_frame(c._sock)
+                if ftype == h2.SETTINGS:
+                    if not flags & h2.FLAG_ACK:
+                        c._sock.sendall(
+                            h2.encode_frame(h2.SETTINGS, h2.FLAG_ACK, 0, b"")
+                        )
+                    continue
+                if ftype == h2.HEADERS and fsid == sid:
+                    for k, v in c._decoder.decode(payload):
+                        trailers[k] = v
+                    if flags & h2.FLAG_END_STREAM:
+                        break
+        assert int(trailers["grpc-status"]) == GRPC_STATUS["InvalidArgument"], body
+        assert "malformed gRPC message" in trailers["grpc-message"]
+        # the connection is still usable afterwards
+        out = c.call(
+            f"/{MGMT}/ListDatabases", {},
+            mp.LIST_DATABASES_REQUEST, mp.LIST_DATABASES_RESPONSE,
         )
-        c._sock.sendall(h2.encode_frame(h2.HEADERS, h2.FLAG_END_HEADERS, sid, block))
-        c._sock.sendall(
-            h2.encode_frame(h2.DATA, h2.FLAG_END_STREAM, sid, b"\x00\x00\x00")
-        )
-        trailers = {}
-        while True:
-            ftype, flags, fsid, payload = h2.read_frame(c._sock)
-            if ftype == h2.SETTINGS:
-                if not flags & h2.FLAG_ACK:
-                    c._sock.sendall(h2.encode_frame(h2.SETTINGS, h2.FLAG_ACK, 0, b""))
-                continue
-            if ftype == h2.HEADERS and fsid == sid:
-                for k, v in c._decoder.decode(payload):
-                    trailers[k] = v
-                if flags & h2.FLAG_END_STREAM:
-                    break
-    assert int(trailers["grpc-status"]) == GRPC_STATUS["InvalidArgument"]
-    assert "malformed gRPC message" in trailers["grpc-message"]
-    # the connection is still usable afterwards
-    from influxdb_iox_spark import management_proto as mp
+        assert isinstance(out, dict)
 
-    out = c.call(
-        f"/{MGMT}/ListDatabases", {},
-        mp.LIST_DATABASES_REQUEST, mp.LIST_DATABASES_RESPONSE,
+
+def test_failing_query_answers_on_error_channel(h2_server):
+    """A handler that fails with a Spark error (here bad SQL over Flight
+    DoGet) answers with a non-zero grpc-status carrying Spark's message,
+    and the same connection then answers a good query."""
+    from influxdb_iox_spark import management_proto as mp
+    from influxdb_iox_spark.protowire import encode_message
+    from influxdb_iox_spark.rpc_flight import flight_ticket
+    from influxdb_iox_spark.rpc_h2 import (
+        FLIGHT_SERVICE,
+        FLIGHT_TICKET,
+        GRPC_STATUS,
+        flight_data_to_table,
     )
-    assert isinstance(out, dict)
+
+    _, _, c = h2_server
+    c.call(
+        f"/{MGMT}/CreateDatabase", {"rules": {"name": "baddb"}},
+        mp.CREATE_DATABASE_REQUEST, mp.CREATE_DATABASE_RESPONSE,
+    )
+    c.call(
+        f"/{WRITE}/Write", {"db_name": "baddb", "lp_data": "cpu,region=west user=1.5 100"},
+        mp.WRITE_REQUEST, mp.WRITE_RESPONSE,
+    )
+
+    def do_get(sql):
+        ticket = encode_message({"ticket": flight_ticket("baddb", sql)}, FLIGHT_TICKET)
+        return c.call_raw(f"/{FLIGHT_SERVICE}/DoGet", ticket)
+
+    msgs, trailers = do_get("SELECT nope FROM cpu")
+    assert msgs == []
+    assert int(trailers["grpc-status"]) == GRPC_STATUS["InvalidArgument"]
+    assert "UNRESOLVED_COLUMN" in trailers["grpc-message"]
+    assert "nope" in trailers["grpc-message"]
+    msgs, trailers = do_get("SELECT region FROM cpu")
+    assert int(trailers["grpc-status"]) == 0
+    assert flight_data_to_table(msgs).column("region").to_pylist() == ["west"]
 
 
 def test_flight_do_get_on_the_same_port(h2_server):

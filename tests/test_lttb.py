@@ -109,6 +109,12 @@ def test_value_out_of_scaling_range_raises(spark):
         lttb_downsample(df, ["k"], "t", "v", n_out=3).collect()
 
 
+def test_null_value_raises_naming_the_column(spark):
+    df = spark.createDataFrame([("a", 0, None)], "k string, t long, v double")
+    with pytest.raises(Exception, match="lttb_downsample: v must be non-null"):
+        lttb_downsample(df, ["k"], "t", "v", n_out=3).collect()
+
+
 def test_score_overflow_raises_not_degrades(spark):
     """Un-rebased ns-scale spans with large values overflow the
     decimal(38,0) score and must raise LOUDLY either way: under ANSI

@@ -2,8 +2,8 @@
 
 Port of /root/reference/tests/end_to_end_cases/{management_api,write_api,
 operations_api}.rs through OUR wire stack: protobuf request bytes
-(hand-rolled codec) → Flight DoAction on a real gRPC socket → protobuf
-response bytes decoded back.  Assertions mirror the reference's, including
+(hand-rolled codec) → the true tonic method path on the h2c gRPC port
+(rpc_h2.GrpcH2Server) → protobuf response bytes decoded back.  Assertions mirror the reference's, including
 the exact "Resource <type>/<name> not found" error strings its tests
 check verbatim (management_api.rs:406,593,603,623).
 
@@ -17,16 +17,11 @@ from __future__ import annotations
 
 import pytest
 
-pytest.importorskip("pyarrow.flight")
-
 from influxdb_iox_spark import management_proto as mp
-from influxdb_iox_spark.protowire import decode_message
-from influxdb_iox_spark.rpc_management import (
-    ControlClient,
-    IoxGrpcServer,
-    IoxServer,
-)
-from influxdb_iox_spark.rpc_storage import StorageClient
+from influxdb_iox_spark.client import IoxClient
+from influxdb_iox_spark.protowire import decode_message, encode_message
+from influxdb_iox_spark.rpc_h2 import GrpcH2Server
+from influxdb_iox_spark.rpc_management import IoxServer
 from influxdb_iox_spark import storage_proto as sp
 
 
@@ -34,14 +29,14 @@ from influxdb_iox_spark import storage_proto as sp
 def srv(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("mgmt_grpc")
     server = IoxServer(spark, str(base))
-    flight = IoxGrpcServer(server)
-    yield server, flight.port
-    flight.shutdown()
+    grpc = GrpcH2Server(server)
+    yield server, grpc.port
+    grpc.shutdown()
 
 
 @pytest.fixture(scope="module")
 def client(srv):
-    c = ControlClient(srv[1])
+    c = IoxClient(grpc_port=srv[1])
     yield c
     c.close()
 
@@ -474,17 +469,17 @@ def test_storage_rpc_on_combined_server(srv, client):
     _create(client, db_name)
     _write(client, db_name, "h2o,state=CA temp=70.4 100\nh2o,state=MA temp=72.3 150")
 
-    storage = StorageClient(srv[1])
     req = {
         "tags_source": sp.make_read_source(org, bucket, partition_id=0),
         "range": {"start": 1, "end": 1000},
     }
-    frames = storage.call(
-        "TagKeys", req, sp.TAG_KEYS_REQUEST, sp.STRING_VALUES_RESPONSE
+    msgs = client._grpc.call_ok(
+        "/influxdata.platform.storage.Storage/TagKeys",
+        encode_message(req, sp.TAG_KEYS_REQUEST),
     )
+    frames = [decode_message(m, sp.STRING_VALUES_RESPONSE) for m in msgs]
     keys = [v for f in frames for v in f["values"]]
     assert b"state" in keys
-    storage.close()
 
 
 # -- restart persistence ----------------------------------------------------
@@ -508,8 +503,6 @@ def test_server_restart_restores_state(srv, spark):
 
 
 def test_iox_client_facade(srv):
-    from influxdb_iox_spark.client import IoxClient
-
     c = IoxClient(grpc_port=srv[1])
     try:
         c.create_database("clientdb", partition_template_parts=[{"table": {}}])
@@ -603,7 +596,7 @@ def test_multi_db_http_server(srv):
 def test_flight_do_get_on_combined_server(srv, client):
     """SQL over Flight do_get on the SAME socket as the control services
     (the reference's single-port deployment); readiness gates it too."""
-    import pyarrow.flight as flight
+    flight = pytest.importorskip("pyarrow.flight")
 
     from influxdb_iox_spark.rpc_flight import flight_ticket
 
@@ -718,7 +711,7 @@ def test_concurrent_grpc_writes_lose_nothing(srv, client):
     errors = []
 
     def writer(worker):
-        c = ControlClient(srv[1])
+        c = IoxClient(grpc_port=srv[1])
         try:
             for i in range(5):
                 c.call(
@@ -782,8 +775,6 @@ def test_system_operations_visible_per_database(srv, client):
 
 
 def test_client_query_flight(srv, client):
-    from influxdb_iox_spark.client import IoxClient
-
     c = IoxClient(grpc_port=srv[1])
     try:
         c.create_database("fq", partition_template_parts=[{"table": {}}])
@@ -948,11 +939,32 @@ def test_cli_run_once(spark, tmp_path):
 
     from influxdb_iox_spark.__main__ import main
 
-    buf = io.StringIO()
+    class ServeOnFlush(io.StringIO):
+        """Drives a client while `run --once` still serves: `run` flushes
+        right after printing its ports and shuts the servers down after."""
+
+        table = None
+
+        def flush(self):
+            if self.table is not None:  # close() flushes again
+                return
+            info = _json.loads(self.getvalue())
+            c = IoxClient(grpc_port=info["grpc_port"])
+            try:
+                c.create_database("oneport")
+                c.write("oneport", "cpu,region=west user=1.5 100")
+                self.table = c.query_flight("oneport", "SELECT region, user FROM cpu")
+            finally:
+                c.close()
+
+    buf = ServeOnFlush()
     assert main(["run", "--base-dir", str(tmp_path / "srv"), "--once"], out=buf) == 0
     info = _json.loads(buf.getvalue())
     assert info["databases"] == []
     assert info["grpc_port"] > 0 and info["http_port"] > 0
+    assert "grpc_h2_port" not in info
+    # management, write and Flight answered on the one printed gRPC port
+    assert buf.table.to_pylist() == [{"region": "west", "user": 1.5}]
 
 
 # -- ADVICE r5 regressions ---------------------------------------------------
@@ -964,8 +976,8 @@ def test_server_id_cannot_be_changed_once_set(spark, tmp_path_factory):
     GetServerStatus reports initialized=false until an id is set."""
     base = tmp_path_factory.mktemp("srvid")
     server = IoxServer(spark, str(base))
-    flight = IoxGrpcServer(server)
-    c = ControlClient(flight.port)
+    grpc = GrpcH2Server(server)
+    c = IoxClient(grpc_port=grpc.port)
     try:
         status = c.call("management", "GetServerStatus", {})["server_status"]
         assert status.get("initialized", False) is False
@@ -978,7 +990,7 @@ def test_server_id_cannot_be_changed_once_set(spark, tmp_path_factory):
         assert status["initialized"] is True
     finally:
         c.close()
-        flight.shutdown()
+        grpc.shutdown()
 
 
 def test_dummy_job_resolvable_with_zero_databases(spark, tmp_path_factory):
@@ -987,8 +999,8 @@ def test_dummy_job_resolvable_with_zero_databases(spark, tmp_path_factory):
     even when no database exists."""
     base = tmp_path_factory.mktemp("dummyjob")
     server = IoxServer(spark, str(base))
-    flight = IoxGrpcServer(server)
-    c = ControlClient(flight.port)
+    grpc = GrpcH2Server(server)
+    c = IoxClient(grpc_port=grpc.port)
     try:
         op = c.call("management", "CreateDummyJob", {"nanos": [100, 200]})[
             "operation"
@@ -1005,7 +1017,7 @@ def test_dummy_job_resolvable_with_zero_databases(spark, tmp_path_factory):
         assert op["name"] in names
     finally:
         c.close()
-        flight.shutdown()
+        grpc.shutdown()
 
 
 def test_cli_run_honors_master_and_conf(tmp_path):

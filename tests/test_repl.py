@@ -96,15 +96,12 @@ def test_parse_sql_passthrough_and_exit():
 @pytest.fixture(scope="module")
 def repl_server(spark, tmp_path_factory):
     from influxdb_iox_spark.client import IoxClient
-    from influxdb_iox_spark.rpc_management import (
-        IoxGrpcServer,
-        IoxMultiDbHttpServer,
-        IoxServer,
-    )
+    from influxdb_iox_spark.rpc_h2 import GrpcH2Server
+    from influxdb_iox_spark.rpc_management import IoxMultiDbHttpServer, IoxServer
 
     base = tmp_path_factory.mktemp("repl_srv")
     server = IoxServer(spark, str(base))
-    grpc = IoxGrpcServer(server)
+    grpc = GrpcH2Server(server)
     http = IoxMultiDbHttpServer(server)
     http_port = http.start()
     client = IoxClient(

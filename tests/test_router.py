@@ -103,11 +103,12 @@ def test_unparseable_connection_string_raises_routing_error():
 
 @pytest.fixture(scope="module")
 def two_servers(spark, tmp_path_factory):
-    from influxdb_iox_spark.rpc_management import IoxGrpcServer, IoxServer
+    from influxdb_iox_spark.rpc_h2 import GrpcH2Server
+    from influxdb_iox_spark.rpc_management import IoxServer
 
     a = IoxServer(spark, str(tmp_path_factory.mktemp("router_a")))
     b = IoxServer(spark, str(tmp_path_factory.mktemp("router_b")))
-    ga, gb = IoxGrpcServer(a), IoxGrpcServer(b)
+    ga, gb = GrpcH2Server(a), GrpcH2Server(b)
     rules = lambda n: {"name": n, "partition_template": {"parts": [{"table": {}}]}}  # noqa: E731
     a.create_database(rules("db_local"))
     b.create_database(rules("db_far"))

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-pytest.importorskip("pyarrow.flight")
-
 from influxdb_iox_spark.rpc_management import GrpcStatusError, IoxServer
 from influxdb_iox_spark.sources.line_protocol import parse_line, parse_lines
 from influxdb_iox_spark.streaming.shard import (

@@ -3,8 +3,8 @@
 Port of /root/reference/tests/end_to_end_cases/storage_api.rs: the same
 five-measurement scenario (scenario.rs:117-180), the same requests, the
 same expected frames/string-sets — but through OUR wire stack: protobuf
-request bytes (hand-rolled codec) → Flight DoAction on a real gRPC socket
-→ protobuf response bytes decoded back.  A codec round-trip battery guards
+request bytes (hand-rolled codec) → the true tonic method path on the h2c
+gRPC port (rpc_h2.GrpcH2Server) → protobuf response bytes decoded back.  A codec round-trip battery guards
 byte-level compatibility of the protowire layer itself.
 """
 
@@ -12,14 +12,11 @@ from __future__ import annotations
 
 import pytest
 
-pytest.importorskip("pyarrow.flight")
-
 from influxdb_iox_spark import storage_proto as sp
-from influxdb_iox_spark.database import Database
 from influxdb_iox_spark.protowire import decode_message, encode_message
-from influxdb_iox_spark.rpc_storage import StorageFlightServer, StorageClient
+from influxdb_iox_spark.rpc_h2 import GrpcH2Client, GrpcH2Server
+from influxdb_iox_spark.rpc_management import IoxServer
 from influxdb_iox_spark.schema import InfluxColumnType, IoxSchema
-from influxdb_iox_spark.sources.store import TableStore
 
 NS = 1_000_000_000  # scenario.ns_since_epoch
 ORG, BUCKET = 0x1111, 0x2222
@@ -64,9 +61,11 @@ def _regex_predicate(key: str, pattern: str) -> dict:
 @pytest.fixture(scope="module")
 def server(spark, tmp_path_factory):
     """The storage_api.rs scenario data (scenario.rs:117-180) in a
-    TableStore-backed database, served over the Flight gRPC socket."""
-    store = TableStore(str(tmp_path_factory.mktemp("storage_grpc")))
-    db = Database(DB_NAME, store, spark)
+    server's database, served on the h2c gRPC port."""
+    server = IoxServer(spark, str(tmp_path_factory.mktemp("storage_grpc")))
+    server.create_database({"name": DB_NAME})
+    db = server.db(DB_NAME).database
+    store = db.store
 
     cpu = IoxSchema.build(
         ["host", "region"], {"value": InfluxColumnType.FIELD_FLOAT}
@@ -124,16 +123,30 @@ def server(spark, tmp_path_factory):
     )
     db.register_table("attributes", attributes)
 
-    srv = StorageFlightServer({DB_NAME: db})
+    srv = GrpcH2Server(server)
     yield srv
     srv.shutdown()
 
 
+class StorageCaller:
+    """Storage RPCs by name over one GrpcH2Client connection."""
+
+    def __init__(self, port: int):
+        self.grpc = GrpcH2Client(port)
+
+    def call(self, rpc_name: str, request: dict, req_schema, resp_schema) -> list[dict]:
+        msgs = self.grpc.call_ok(
+            f"/influxdata.platform.storage.Storage/{rpc_name}",
+            encode_message(request, req_schema),
+        )
+        return [decode_message(m, resp_schema) for m in msgs]
+
+
 @pytest.fixture(scope="module")
 def client(server):
-    c = StorageClient(server.port)
+    c = StorageCaller(server.port)
     yield c
-    c.close()
+    c.grpc.close()
 
 
 def _dump_frames(responses: list[dict]) -> list[str]:
@@ -240,8 +253,6 @@ def test_tag_values_endpoint(client):
 def test_tag_values_measurement_pseudo_key(client):
     """tag_key=\\x00 lists measurement names (service.rs:482-502); with a
     general predicate it errors (NotYetImplemented in the reference)."""
-    import pyarrow.flight as fl
-
     req = {"tags_source": _read_source(), "range": _range(), "tag_key": b"\x00"}
     resp = client.call(
         "TagValues", req, sp.TAG_VALUES_REQUEST, sp.STRING_VALUES_RESPONSE
@@ -250,7 +261,7 @@ def test_tag_values_measurement_pseudo_key(client):
         b"attributes", b"cpu_load_short", b"status", b"swap", b"system"
     ]
     bad = dict(req, predicate=_tag_predicate("host", "server01"))
-    with pytest.raises(fl.FlightServerError, match="general predicate"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*general predicate"):
         client.call("TagValues", bad, sp.TAG_VALUES_REQUEST, sp.STRING_VALUES_RESPONSE)
 
 
@@ -350,15 +361,13 @@ def test_read_group_sum_agg(client):
 
 
 def test_read_group_rejects_hints(client):
-    import pyarrow.flight as fl
-
     req = {
         "read_source": _read_source(),
         "range": _range(),
         "group": sp.GROUP_BY,
         "hints": 42,
     }
-    with pytest.raises(fl.FlightServerError, match="hints"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*hints"):
         client.call("ReadGroup", req, sp.READ_GROUP_REQUEST, sp.READ_RESPONSE)
 
 
@@ -388,10 +397,8 @@ def test_read_window_aggregate(client):
 
 
 def test_read_window_aggregate_requires_one_aggregate(client):
-    import pyarrow.flight as fl
-
     req = {"read_source": _read_source(), "range": _range(), "window_every": 2}
-    with pytest.raises(fl.FlightServerError, match="Exactly one aggregate"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*Exactly one aggregate"):
         client.call(
             "ReadWindowAggregate", req, sp.READ_WINDOW_AGGREGATE_REQUEST,
             sp.READ_RESPONSE,
@@ -423,10 +430,8 @@ def test_read_series_cardinality(client):
 
 
 def test_unknown_database_errors(client):
-    import pyarrow.flight as fl
-
     req = {"read_source": sp.make_read_source(0xDEAD, 0xBEEF), "range": _range()}
-    with pytest.raises(fl.FlightServerError, match="not found"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*not found"):
         client.call("ReadFilter", req, sp.READ_FILTER_REQUEST, sp.READ_RESPONSE)
 
 
@@ -564,23 +569,19 @@ def test_read_group_no_predicate_sum(client):
 def test_read_group_none_with_keys_rejected(client):
     """expr.rs:526-537 InvalidGroupNone: Group::None plus group keys is a
     client error."""
-    import pyarrow.flight as fl
-
     req = {
         "read_source": _read_source(),
         "range": _range(),
         "group": sp.GROUP_NONE,
         "group_keys": ["host"],
     }
-    with pytest.raises(fl.FlightServerError, match="group none"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*group none"):
         client.call("ReadGroup", req, sp.READ_GROUP_REQUEST, sp.READ_RESPONSE)
 
 
 def test_read_group_unknown_key_rejected(client):
     """influxrpc.rs:1265-1299 GroupColumnNotFound: a group key that is not
     a tag of a planned measurement fails the request."""
-    import pyarrow.flight as fl
-
     req = {
         "read_source": _read_source(),
         "range": _range(),
@@ -588,7 +589,7 @@ def test_read_group_unknown_key_rejected(client):
         "group_keys": ["no_such_tag"],
         "aggregate": {"type": 1},
     }
-    with pytest.raises(fl.FlightServerError, match="no_such_tag"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*no_such_tag"):
         client.call("ReadGroup", req, sp.READ_GROUP_REQUEST, sp.READ_RESPONSE)
 
 
@@ -596,14 +597,12 @@ def test_window_aggregate_empty_window_rejected(client):
     """expr.rs:546-590 EmptyWindow: no window message and zero legacy
     fields is a client error (window_bounds with every=0 would divide the
     timeline into nothing)."""
-    import pyarrow.flight as fl
-
     req = {
         "read_source": _read_source(),
         "range": _range(),
         "aggregate": [{"type": 1}],
     }
-    with pytest.raises(fl.FlightServerError, match="window"):
+    with pytest.raises(RuntimeError, match="grpc-status 3: .*window"):
         client.call(
             "ReadWindowAggregate", req, sp.READ_WINDOW_AGGREGATE_REQUEST,
             sp.READ_RESPONSE,

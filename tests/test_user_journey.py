@@ -24,14 +24,11 @@ pytest.importorskip("pyarrow.flight")
 import pyarrow.flight as flight
 
 from influxdb_iox_spark.client import IoxClient
+from influxdb_iox_spark.protowire import decode_message, encode_message
 from influxdb_iox_spark.rpc_flight import flight_ticket
-from influxdb_iox_spark.rpc_management import (
-    IoxGrpcServer,
-    IoxMultiDbHttpServer,
-    IoxServer,
-)
+from influxdb_iox_spark.rpc_h2 import GrpcH2Client, GrpcH2Server
+from influxdb_iox_spark.rpc_management import IoxMultiDbHttpServer, IoxServer
 from influxdb_iox_spark import storage_proto as sp
-from influxdb_iox_spark.rpc_storage import StorageClient
 
 
 def test_full_user_journey(spark, tmp_path):
@@ -41,7 +38,7 @@ def test_full_user_journey(spark, tmp_path):
 
     # primary server: gRPC (all services + Flight) and HTTP on live state
     primary = IoxServer(spark, str(tmp_path / "primary"))
-    grpc = IoxGrpcServer(primary)
+    grpc = GrpcH2Server(primary)
     http = IoxMultiDbHttpServer(primary)
     http_port = http.start()
     client = IoxClient(grpc_port=grpc.port, http_url=f"http://127.0.0.1:{http_port}")
@@ -82,17 +79,19 @@ def test_full_user_journey(spark, tmp_path):
         assert table.to_pylist() == [{"n": 4}]
         conn.close()
         # 3c. the storage RPC menu
-        storage = StorageClient(grpc.port)
-        vals = storage.call(
-            "TagValues",
-            {
-                "tags_source": sp.make_read_source(org, bucket, partition_id=0),
-                "range": {"start": 1, "end": 1000},
-                "tag_key": b"region",
-            },
-            sp.TAG_VALUES_REQUEST,
-            sp.STRING_VALUES_RESPONSE,
+        storage = GrpcH2Client(grpc.port)
+        msgs = storage.call_ok(
+            "/influxdata.platform.storage.Storage/TagValues",
+            encode_message(
+                {
+                    "tags_source": sp.make_read_source(org, bucket, partition_id=0),
+                    "range": {"start": 1, "end": 1000},
+                    "tag_key": b"region",
+                },
+                sp.TAG_VALUES_REQUEST,
+            ),
         )
+        vals = [decode_message(m, sp.STRING_VALUES_RESPONSE) for m in msgs]
         assert [v for f in vals for v in f["values"]] == [b"east", b"west"]
         storage.close()
 
@@ -173,35 +172,23 @@ def test_full_user_journey(spark, tmp_path):
         )
         assert [r.doc_id for r in fresh.collect()] == [901]
 
-        # 9. the third write path: PB column batches over the h2c gRPC
-        # endpoint (true tonic method path), then the series-transform
-        # library over the served table
-        from influxdb_iox_spark import management_proto as mp
+        # 9. the third write path: PB column batches over the same gRPC
+        # port, then the series-transform library over the served table
         from influxdb_iox_spark.operators import transforms as T
-        from influxdb_iox_spark.rpc_h2 import GrpcH2Client, GrpcH2Server
 
-        h2 = GrpcH2Server(primary)
-        h2c = GrpcH2Client(h2.port)
-        try:
-            req = {"database_batch": {"database_name": db, "table_batches": [{
-                "table_name": "mem", "row_count": 3, "columns": [
-                    {"column_name": "host", "semantic_type": 2,
-                     "values": {"string_values": ["a", "a", "a"]},
-                     "null_mask": b""},
-                    {"column_name": "used", "semantic_type": 3,
-                     "values": {"f64_values": [1.0, 3.0, 6.0]},
-                     "null_mask": b""},
-                    {"column_name": "time", "semantic_type": 4,
-                     "values": {"i64_values": [10**9, 2 * 10**9, 3 * 10**9]},
-                     "null_mask": b""},
-                ]}]}}
-            h2c.call(
-                "/influxdata.transfer.column.v1.WriteService/Write",
-                req, mp.PB_WRITE_REQUEST, mp.PB_WRITE_RESPONSE,
-            )
-        finally:
-            h2c.close()
-            h2.shutdown()
+        req = {"database_batch": {"database_name": db, "table_batches": [{
+            "table_name": "mem", "row_count": 3, "columns": [
+                {"column_name": "host", "semantic_type": 2,
+                 "values": {"string_values": ["a", "a", "a"]},
+                 "null_mask": b""},
+                {"column_name": "used", "semantic_type": 3,
+                 "values": {"f64_values": [1.0, 3.0, 6.0]},
+                 "null_mask": b""},
+                {"column_name": "time", "semantic_type": 4,
+                 "values": {"i64_values": [10**9, 2 * 10**9, 3 * 10**9]},
+                 "null_mask": b""},
+            ]}]}}
+        client.call("pb_write", "Write", req)
         mem = primary.databases[db].database.table("mem")
         w = T.series_window(["host"], ["time"])
         diffs = {

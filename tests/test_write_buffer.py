@@ -9,8 +9,6 @@ import os
 
 import pytest
 
-pytest.importorskip("pyarrow.flight")
-
 from influxdb_iox_spark.rpc_management import GrpcStatusError, IoxServer
 from influxdb_iox_spark.streaming.write_buffer import FileWriteBuffer
 
